@@ -11,6 +11,11 @@ import org.apache.spark.sql.SparkSession
   * Every field is overridable per-session via `spark.conf` keys
   * `spark.graft.<camelCaseName>` (reference: env-var overrides,
   * inception/config.py + .env.example).
+  *
+  * The reference's request cap (`max_batch_size`, config.py:26), thread
+  * pool (`max_workers`, config.py:28) and CPU/GPU switch (`force_cpu`,
+  * config.py:32) have no field: Spark partitioning does the first two and
+  * the JVM kernel is CPU-only (SURVEY.md §4).
   */
 final case class EngineConfig(
     modelName: String = "hashing-768", // config.py:6-9 transformer_model_name
@@ -19,10 +24,7 @@ final case class EngineConfig(
     minTextLength: Int = 1,          // config.py:23
     maxQueryLength: Int = 1000,      // config.py:24
     maxTextLength: Int = 10000000,   // config.py:25
-    maxBatchSize: Int = 100,         // config.py:26
     processingBatchSize: Int = 8,    // config.py:27
-    maxWorkers: Int = 4,             // config.py:28
-    forceCpu: Boolean = false,       // config.py:32
     enableMetrics: Boolean = true    // config.py:33
 ) {
   /** reference: embedding_service.py:49 `int(max_tokens * overlap_ratio)` */
@@ -36,7 +38,7 @@ object EngineConfig {
 
   /** Read overrides from the session conf; absent keys keep defaults.
     * A malformed value fails naming the offending conf KEY — a bare
-    * NumberFormatException("512m") with ten candidate keys is
+    * NumberFormatException("512m") with eight candidate keys is
     * undebuggable.
     */
   def fromSpark(spark: SparkSession): EngineConfig = {
@@ -61,10 +63,7 @@ object EngineConfig {
       minTextLength = i("minTextLength", base.minTextLength),
       maxQueryLength = i("maxQueryLength", base.maxQueryLength),
       maxTextLength = i("maxTextLength", base.maxTextLength),
-      maxBatchSize = i("maxBatchSize", base.maxBatchSize),
       processingBatchSize = i("processingBatchSize", base.processingBatchSize),
-      maxWorkers = i("maxWorkers", base.maxWorkers),
-      forceCpu = b("forceCpu", base.forceCpu),
       enableMetrics = b("enableMetrics", base.enableMetrics)
     )
   }

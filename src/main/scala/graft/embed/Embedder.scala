@@ -46,60 +46,31 @@ object Embedder extends EmbeddingModel {
 
   /** Embed one text (already prefixed by the caller).
     *
-    * Single allocation-free scan: subword char ranges are hashed in place
-    * — byte-identical to hashing SimpleTokenizer.encode's whitespace-
-    * trimmed token strings (EmbedderProps asserts the equivalence), at a
-    * fraction of the cost. This is the per-row hot loop of the 100-TB
-    * embed pass, so it must not allocate per token.
+    * Single allocation-free scan over the tokenizer's pieces
+    * ([[SimpleTokenizer.skipWs]] / [[SimpleTokenizer.pieceEnd]]): each
+    * piece's char range is hashed in place — byte-identical to hashing
+    * SimpleTokenizer.encode's whitespace-trimmed token strings
+    * (EmbedderProps asserts the equivalence). This is the per-row hot
+    * loop of the 100-TB embed pass, so it must not allocate per token.
     */
   def embed(text0: String): Array[Float] = {
     val text = if (text0 == null) "" else text0
     val vec = new Array[Float](Dim)
     var prev = 0L
     var first = true
-    @inline def feed(h: Long): Unit = {
+    var i = SimpleTokenizer.skipWs(text, 0)
+    while (i < text.length) {
+      val e = SimpleTokenizer.pieceEnd(text, i)
+      val h = hashRange(text, i, e)
       addFeature(vec, h)
       if (!first) addFeature(vec, mix64(prev) ^ h) // order-sensitive bigram
       first = false
       prev = h
-    }
-    val n = text.length
-    var i = 0
-    while (i < n) {
-      while (i < n && SimpleTokenizer.isWs(text.charAt(i))) i += 1
-      if (i < n) {
-        if (SimpleTokenizer.isWordChar(text.charAt(i))) {
-          val wStart = i
-          while (i < n && SimpleTokenizer.isWordChar(text.charAt(i))) i += 1
-          var j = wStart
-          while (j < i) {
-            val k = math.min(j + SimpleTokenizer.SubwordLen, i)
-            feed(hashRange(text, j, k))
-            j = k
-          }
-        } else {
-          feed(hashRange(text, i, i + 1))
-          i += 1
-        }
-      }
+      i = SimpleTokenizer.skipWs(text, e)
     }
     l2Normalize(vec)
     vec
   }
-
-  /** Batched variant mirroring the reference's `model.encode(sentences,
-    * batch_size=processing_batch_size)` call shape
-    * (embedding_service.py:207-213). On a GPU-backed kernel this is where
-    * device micro-batching would live; here it is a simple map.
-    */
-  override def embedBatch(texts: Seq[String]): Seq[Array[Float]] =
-    texts.map(embed)
-
-  /** Query embedding: prepend the query task prefix then embed
-    * (embedding_service.py:159-164).
-    */
-  override def embedQuery(text: String): Array[Float] =
-    embed(graft.text.Chunker.QueryLead + text)
 
   private def l2Normalize(vec: Array[Float]): Unit = {
     var ss = 0.0

@@ -42,8 +42,10 @@ final case class EmbeddedChunk(
   *     crosses the network. The reference's positional-zip reassembly
   *     (embedding_service.py:220-257) disappears entirely.
   *   - [[embedDocumentsExploded]] produces the long-format chunk table for
-  *     downstream relational use; it is equally narrow (posexplode is
-  *     pipelined) — any groupBy a consumer adds is their shuffle, keyed on
+  *     downstream relational use; it runs the same per-document
+  *     chunk → embed → number function inside the same kind of
+  *     mapPartitions, flattened to one row per chunk, so it is equally
+  *     narrow — any groupBy a consumer adds is their shuffle, keyed on
   *     doc_id with bounded rows per key (max_text_length caps a doc at
   *     ~5k chunks, SURVEY.md §4).
   *   - Per-doc work is bounded by `maxTextLength`, so task skew is capped;
@@ -223,12 +225,59 @@ class InceptionEngine(
         col("chunk")
       )
 
-  /** Long-format embedding table `(doc_id, chunk_number, chunk, embedding)`
-    * with the lead prefix stripped from `chunk` (embedding_service.py:221-223)
-    * but INCLUDED in the embedded text (ibid:90). Batched inference inside
-    * `mapPartitions` mirrors `model.encode(batch_size=processing_batch_size)`
-    * (embedding_service.py:207-213) — the standard Spark distributed-
-    * inference shape; still a narrow, shuffle-free plan.
+  /** The per-document ingest operator both batch endpoints share:
+    * chunk → embed in `processingBatchSize` groups (the reference's
+    * `model.encode(batch_size=processing_batch_size)`,
+    * embedding_service.py:207-213) → strip the lead from the returned
+    * chunk (ibid:221-223; the lead stays IN the embedded text, ibid:90) →
+    * number chunks from 1 (ibid:241-247). Built from locals so the task
+    * closure ships only the model, the three settings and the
+    * accumulators, never the engine + metrics.
+    */
+  private def chunkAndEmbed: String => Vector[ChunkEmbedding] = {
+    val mt = conf.maxTokens
+    val ov = conf.numOverlapSentences
+    val batchSize = conf.processingBatchSize
+    val chunkAcc = metrics.map(_.chunkCount("text"))
+    val timeHist = metrics.map(_.processingTimeHistogram("batch"))
+    val mdl = model
+    text => {
+      val t0 = System.nanoTime()
+      val chunks = Chunker.split(text, mt, ov)
+      chunkAcc.foreach(_.add(chunks.size.toLong))
+      val vecs = chunks.grouped(batchSize).flatMap(mdl.embedBatch).toVector
+      timeHist.foreach(_.observe((System.nanoTime() - t0) / 1000000L))
+      Vector.tabulate(chunks.length)(i =>
+        ChunkEmbedding(i + 1, chunks(i).replace(Chunker.LeadText, ""), vecs(i)))
+    }
+  }
+
+  /** The valid `(doc_id, text)` rows of `df` — the O1 routing step in
+    * front of both batch endpoints (see [[embedDocuments]] for
+    * `dedupeIds`).
+    */
+  private def validDocuments(
+      df: DataFrame,
+      idCol: String,
+      textCol: String,
+      dedupeIds: Boolean = false
+  ): Dataset[Document] = {
+    val spark = df.sparkSession
+    import spark.implicits._
+    val base0 = df.select(
+      col(idCol).cast(LongType).as("doc_id"),
+      col(textCol).as("text")
+    )
+    val base =
+      if (dedupeIds) base0.groupBy("doc_id").agg(max("text").as("text"))
+      else base0
+    withValidation(base).filter(col("error_type").isNull)
+      .select("doc_id", "text").as[Document]
+  }
+
+  /** Long-format embedding table `(doc_id, chunk_number, chunk, embedding)`:
+    * the same per-document operator as [[embedDocuments]], flattened to
+    * one row per chunk. Still a narrow, shuffle-free plan.
     */
   def embedDocumentsExploded(
       df: DataFrame,
@@ -237,25 +286,13 @@ class InceptionEngine(
   ): Dataset[EmbeddedChunk] = {
     val spark = df.sparkSession
     import spark.implicits._
-    val batchSize = conf.processingBatchSize
-    val valid = withValidation(df, textCol).filter(col("error_type").isNull)
-    val chunks = chunkDocuments(valid, idCol, textCol)
-      .as[(Long, Int, String)]
+    val valid = validDocuments(df, idCol, textCol)
     countRequest("batch")
-    val chunkAcc = metrics.map(_.chunkCount("text"))
-    val timeHist = metrics.map(_.processingTimeHistogram("batch"))
-    val mdl = model
-    chunks.mapPartitions { it =>
-      it.grouped(batchSize).flatMap { batch =>
-        chunkAcc.foreach(_.add(batch.size.toLong))
-        val t0 = System.nanoTime()
-        val vecs = mdl.embedBatch(batch.map(_._3))
-        timeHist.foreach(_.observe((System.nanoTime() - t0) / 1000000L))
-        batch.lazyZip(vecs).map { case ((id, n, chunk), v) =>
-          EmbeddedChunk(id, n, chunk.replace(Chunker.LeadText, ""), v)
-        }
-      }
-    }
+    val perDoc = chunkAndEmbed
+    valid.mapPartitions(_.flatMap { d =>
+      perDoc(d.text).map(c =>
+        EmbeddedChunk(d.doc_id, c.chunk_number, c.chunk, c.embedding))
+    })
   }
 
   /** FLAGSHIP — `/api/v1/embed/batch` (routes/embedding.py:95-126 →
@@ -277,37 +314,10 @@ class InceptionEngine(
   ): Dataset[DocumentEmbeddings] = {
     val spark = df.sparkSession
     import spark.implicits._
-    val mt = conf.maxTokens
-    val ov = conf.numOverlapSentences
-    val batchSize = conf.processingBatchSize
-    val base0 = df.select(
-      col(idCol).cast(LongType).as("doc_id"),
-      col(textCol).as("text")
-    )
-    val base =
-      if (dedupeIds) base0.groupBy("doc_id").agg(max("text").as("text"))
-      else base0
-    val valid = withValidation(base).filter(col("error_type").isNull)
-      .select("doc_id", "text").as[Document]
+    val valid = validDocuments(df, idCol, textCol, dedupeIds)
     countRequest("batch")
-    val chunkAcc = metrics.map(_.chunkCount("text"))
-    val timeHist = metrics.map(_.processingTimeHistogram("batch"))
-    val mdl = model
-    valid.mapPartitions { docs =>
-      docs.map { d =>
-        val t0 = System.nanoTime()
-        val chunks = Chunker.split(d.text, mt, ov)
-        chunkAcc.foreach(_.add(chunks.size.toLong))
-        val vecs =
-          chunks.grouped(batchSize).flatMap(mdl.embedBatch).toVector
-        timeHist.foreach(_.observe((System.nanoTime() - t0) / 1000000L))
-        val embs = chunks.lazyZip(vecs).zipWithIndex.map {
-          case ((chunk, v), idx) =>
-            ChunkEmbedding(idx + 1, chunk.replace(Chunker.LeadText, ""), v)
-        }
-        DocumentEmbeddings(d.doc_id, embs.toVector)
-      }
-    }
+    val perDoc = chunkAndEmbed
+    valid.mapPartitions(_.map(d => DocumentEmbeddings(d.doc_id, perDoc(d.text))))
   }
 
   /** `/api/v1/embed/query` (routes/embedding.py:46-65): validate (1000-char

@@ -41,8 +41,7 @@ object Similarity {
   /** Native-expression cosine against a literal query vector. */
   private def cosineNative(df: DataFrame, vec: Column, query: Array[Float]): Column = {
     graft.functions.CosineSimilarity.register(df.sparkSession)
-    graft.functions.CosineSimilarity.cosine(
-      vec, array(query.toSeq.map(lit(_)): _*))
+    graft.functions.CosineSimilarity.cosine(vec, typedLit(query))
   }
 
   /** Exact cosine top-k: narrow scan + TakeOrderedAndProject. */

@@ -99,7 +99,7 @@ private[graft] trait SparkEntryOracleA { this: SparkEntry.type =>
          FROM c ORDER BY doc_id""",
     "validate_length" ->
       """WITH c AS (SELECT doc_id,
-           length(regexp_replace(text,'^[\s\p{Z}\x{85}]+|[\s\p{Z}\x{85}]+$','','g')) AS slen
+           length(regexp_replace(coalesce(text, ''),'^[\s\p{Z}\x{85}]+|[\s\p{Z}\x{85}]+$','','g')) AS slen
          FROM documents)
          SELECT doc_id,
            CASE WHEN slen < 1 THEN 'text_too_short'
@@ -424,7 +424,7 @@ private[graft] trait SparkEntryOracleA { this: SparkEntry.type =>
          ORDER BY custkey""",
     "validate_query" ->
       """WITH c AS (SELECT doc_id, text,
-           length(regexp_replace(text,'^[\s\p{Z}\x{85}]+|[\s\p{Z}\x{85}]+$','','g')) AS slen,
+           length(regexp_replace(coalesce(text, ''),'^[\s\p{Z}\x{85}]+|[\s\p{Z}\x{85}]+$','','g')) AS slen,
            regexp_replace(regexp_replace(regexp_replace(regexp_replace(
              regexp_replace(text, '[^\n\t\x20-\x7E]', '', 'g'),
              '\t', ' ', 'g'),

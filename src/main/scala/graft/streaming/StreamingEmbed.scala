@@ -14,9 +14,10 @@ import graft.engine.InceptionEngine
   */
 object StreamingEmbed {
 
-  /** Stream-embed documents: the SAME narrow transforms as
-    * InceptionEngine.embedDocumentsExploded — chunk + embed are stateless,
-    * so append mode needs no watermark or state store. Works on any
+  /** Stream-embed documents: InceptionEngine.embedDocumentsExploded as
+    * is — validation, then the engine's per-document chunk → embed →
+    * number function in one mapPartitions. Every step is stateless per
+    * row, so append mode needs no watermark or state store. Works on any
     * streaming DataFrame with (doc_id, text).
     */
   def embedStream(engine: InceptionEngine, stream: DataFrame): DataFrame =

@@ -9,14 +9,13 @@ package graft.text
   * chunker relies on:
   *
   *   - `encode` → sequence of token pieces; `count = pieces.length`
-  *   - `decode(encode(s)) == s` for trimmed `s` (exact round-trip — BPE has
-  *     the same property for already-clean text)
+  *   - `encode(s).mkString == s` for trimmed `s` (exact round-trip — BPE
+  *     has the same property for already-clean text)
   *   - token counts are CONTEXT-FREE and ADDITIVE:
   *     `count(a + " " + b) == count(a) + count(b)` — this makes the
-  *     chunker's budget arithmetic exact (no re-encode drift) while the
-  *     reference must re-encode joined overlap text
-  *     (embedding_service.py:124-126); we still re-encode where the
-  *     reference does, for semantic fidelity.
+  *     chunker's budget arithmetic exact: it sums per-sentence counts
+  *     where the reference re-encodes joined overlap text
+  *     (embedding_service.py:124-126).
   *   - truncation to n tokens can cut inside a long word at a subword
   *     boundary, like BPE.
   *
@@ -39,52 +38,53 @@ object SimpleTokenizer {
 
   @inline def isWs(c: Char): Boolean = Character.isWhitespace(c)
 
+  /** First non-whitespace index at or after `i` (`text.length` if none). */
+  @inline def skipWs(text: String, i: Int): Int = {
+    var j = i
+    while (j < text.length && isWs(text.charAt(j))) j += 1
+    j
+  }
+
+  /** End (exclusive) of the piece that starts at the non-whitespace index
+    * `i`: a word-char run capped at [[SubwordLen]] chars, else one char.
+    * With [[skipWs]] this is the whole piece rule — every scan over
+    * tokens (encode, count, the embedding kernel, the chunker) walks
+    * `i = skipWs(t, pieceEnd(t, i))` and allocates nothing.
+    */
+  @inline def pieceEnd(text: String, i: Int): Int =
+    if (isWordChar(text.charAt(i))) {
+      val cap = math.min(i + SubwordLen, text.length)
+      var j = i + 1
+      while (j < cap && isWordChar(text.charAt(j))) j += 1
+      j
+    } else i + 1
+
   /** Tokenize into pieces; concatenation of pieces == input minus trailing
     * whitespace. Each piece carries its leading whitespace.
     */
   def encode(text: String): Vector[String] = {
-    if (text == null || text.isEmpty) return Vector.empty
+    if (text == null) return Vector.empty
     val out = Vector.newBuilder[String]
-    val n = text.length
-    var i = 0
-    while (i < n) {
-      val wsStart = i
-      while (i < n && isWs(text.charAt(i))) i += 1
-      if (i < n) {
-        val ws = text.substring(wsStart, i)
-        val c = text.charAt(i)
-        if (isWordChar(c)) {
-          val wStart = i
-          while (i < n && isWordChar(text.charAt(i))) i += 1
-          // slice word into SubwordLen-char subwords; first carries the ws
-          var j = wStart
-          var first = true
-          while (j < i) {
-            val k = math.min(j + SubwordLen, i)
-            val piece = text.substring(j, k)
-            out += (if (first) ws + piece else piece)
-            first = false
-            j = k
-          }
-        } else {
-          out += (ws + c)
-          i += 1
-        }
-      }
-      // trailing whitespace (i == n after ws scan) is dropped
+    var from = 0
+    var i = skipWs(text, 0)
+    while (i < text.length) {
+      val e = pieceEnd(text, i)
+      out += text.substring(from, e)
+      from = e
+      i = skipWs(text, e)
     }
     out.result()
   }
 
-  /** Exact inverse of encode for trimmed input. */
-  def decode(tokens: Seq[String]): String = {
-    val s = tokens.mkString
-    // leading ws can survive on the first token if the input had it
-    var b = 0
-    while (b < s.length && isWs(s.charAt(b))) b += 1
-    s.substring(b)
+  def countTokens(text: String, addSpecialTokens: Boolean = false): Int = {
+    var n = if (addSpecialTokens) NumSpecialTokens else 0
+    if (text != null) {
+      var i = skipWs(text, 0)
+      while (i < text.length) {
+        n += 1
+        i = skipWs(text, pieceEnd(text, i))
+      }
+    }
+    n
   }
-
-  def countTokens(text: String, addSpecialTokens: Boolean = false): Int =
-    encode(text).length + (if (addSpecialTokens) NumSpecialTokens else 0)
 }

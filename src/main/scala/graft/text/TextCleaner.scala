@@ -45,9 +45,11 @@ object TextCleaner {
     * padded with NBSP/ideographic space that the reference rejects, so
     * the (?U) flag widens `\s` to \p{IsWhite_Space}. The DuckDB oracle
     * mirrors it as the RE2 class `[\s\p{Z}\x{85}]` (same code points).
+    * A null text has length 0, so every validation branch sees it as too
+    * short — like the scalar `Validation.validateQueryLength`.
     */
   def strippedLength(text: Column): Column =
-    length(regexp_replace(text, "(?U)^\\s+|\\s+$", ""))
+    length(regexp_replace(coalesce(text, lit("")), "(?U)^\\s+|\\s+$", ""))
 
   /** Plain-Scala twin of [[cleanTextForJson]] for pure-function call sites
     * (chunker tests, single-query path). Kept in lockstep with the Column

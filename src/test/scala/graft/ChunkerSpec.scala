@@ -1,9 +1,132 @@
 package graft
 
-import org.scalacheck.{Gen, Prop, Properties}
+import org.scalacheck.{Gen, Prop, Properties, Test}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.text.{Chunker, SentenceSplitter, SimpleTokenizer}
+
+/** Reference packer: the chunker's control flow on encoded token strings
+  * and decoded sentences, line for line — the oracle the count-based
+  * `Chunker.splitSentences` must equal.
+  */
+object ReferencePacker {
+
+  /** Exact inverse of `SimpleTokenizer.encode` for trimmed input. */
+  def decode(tokens: Seq[String]): String = {
+    val s = tokens.mkString
+    // leading ws can survive on the first token if the input had it
+    var b = 0
+    while (b < s.length && SimpleTokenizer.isWs(s.charAt(b))) b += 1
+    s.substring(b)
+  }
+
+  def splitSentences(
+      sentences: Seq[String],
+      maxTokens: Int,
+      numOverlapSentences: Int
+  ): Vector[String] = {
+    import Chunker.LeadText
+    val leadLen = SimpleTokenizer.countTokens(LeadText, addSpecialTokens = true)
+    val chunks = Vector.newBuilder[String]
+    // current chunk as decoded sentence strings, mirrors `current_chunks`
+    var current = Vector.empty[String]
+    var currentCount = leadLen
+
+    def flushCurrent(): Unit =
+      if (current.nonEmpty) chunks += (LeadText + current.mkString(" "))
+
+    sentences.foreach { sentence =>
+      val tokens = SimpleTokenizer.encode(sentence)
+      val sentLen = tokens.length
+      if (leadLen + sentLen > maxTokens) {
+        // oversized sentence: flush, emit truncated as its own chunk, reset
+        flushCurrent()
+        val truncated =
+          decode(tokens.take(math.max(0, maxTokens - leadLen)))
+        chunks += (LeadText + truncated)
+        current = Vector.empty
+        currentCount = leadLen
+      } else if (currentCount + sentLen > maxTokens) {
+        val overlap = current.takeRight(math.max(0, numOverlapSentences))
+        flushCurrent()
+        val overlapCount =
+          SimpleTokenizer.encode(overlap.mkString(" ")).length
+        if (leadLen + overlapCount + sentLen > maxTokens) {
+          current = Vector(decode(tokens))
+          currentCount = leadLen + sentLen
+        } else {
+          current = overlap :+ decode(tokens)
+          currentCount = leadLen + overlapCount + sentLen
+        }
+      } else {
+        current = current :+ decode(tokens)
+        currentCount += sentLen
+      }
+    }
+    flushCurrent()
+    chunks.result()
+  }
+}
+
+/** The count-based packer, the offset truncation and the scanning token
+  * count against the encode/decode reference, on adversarial text:
+  * empty and whitespace-only sentences, Unicode and control whitespace,
+  * non-ASCII chars and emoji, long words.
+  */
+object PackerEquivalenceProps extends Properties("PackerEquivalence") {
+
+  private val ws: Gen[Char] = Gen.oneOf(' ', ' ', '\t', '\n', '\r',
+    '\u000b', '\u000c', '\u001c', '\u0085', '\u00a0', '\u1680',
+    '\u2003', '\u2028', '\u3000')
+
+  private val wordChar: Gen[Char] =
+    Gen.frequency(8 -> Gen.alphaNumChar, 1 -> Gen.const('_'))
+
+  // whole surrogate pairs only: a lone surrogate cannot be written to the
+  // UTF-8 test report of a failing case
+  private val other: Gen[String] = Gen.oneOf(".", ",", "\"", "(", "-", "§",
+    "é", "ñ", "\u0007", "\u0000", "\ud83d\ude0a", "中")
+
+  private val piece: Gen[String] = Gen.frequency(
+    6 -> Gen.chooseNum(1, 9).flatMap(n => Gen.stringOfN(n, wordChar)),
+    1 -> Gen.chooseNum(20, 60).flatMap(n => Gen.stringOfN(n, wordChar)),
+    3 -> other,
+    3 -> Gen.chooseNum(1, 3).flatMap(n => Gen.stringOfN(n, ws)))
+
+  private val text: Gen[String] =
+    Gen.chooseNum(0, 25).flatMap(n => Gen.listOfN(n, piece)).map(_.mkString)
+
+  private val sentence: Gen[String] = Gen.frequency(
+    1 -> Gen.const(""),
+    1 -> Gen.chooseNum(1, 4).flatMap(n => Gen.stringOfN(n, ws)),
+    8 -> text)
+
+  private val sentenceList: Gen[List[String]] =
+    Gen.chooseNum(0, 30).flatMap(n => Gen.listOfN(n, sentence))
+
+  private val budget: Gen[Int] = Gen.oneOf(1, 5, 7, 12, 15, 32, 64)
+
+  override def overrideParameters(p: Test.Parameters): Test.Parameters =
+    p.withMinSuccessfulTests(2000)
+
+  property("splitSentences == encode/decode reference packer") =
+    Prop.forAll(sentenceList, budget, Gen.chooseNum(0, 3)) { (sents, mt, ov) =>
+      Chunker.splitSentences(sents, mt, ov) ==
+        ReferencePacker.splitSentences(sents, mt, ov)
+    }
+
+  property("countTokens(s) == encode(s).length") =
+    Prop.forAll(text) { s =>
+      SimpleTokenizer.countTokens(s) == SimpleTokenizer.encode(s).length
+    }
+
+  property("truncation by offset == decode(encode(s).take(n))") =
+    Prop.forAll(sentence, Gen.chooseNum(0, 30)) { (s, n) =>
+      val tokens = SimpleTokenizer.encode(s)
+      Chunker.truncate(ReferencePacker.decode(tokens), n) ==
+        ReferencePacker.decode(tokens.take(n))
+    }
+}
 
 /** Chunker invariants ported from the reference's test suite
   * (tests/test_embedding_service.py:265-476) as ScalaCheck properties —
@@ -64,7 +187,7 @@ object ChunkerProps extends Properties("Chunker") {
 
   property("tokenizer round-trip: decode(encode(s)) == s for trimmed s") =
     Prop.forAll(sentence) { s =>
-      SimpleTokenizer.decode(SimpleTokenizer.encode(s)) == s
+      ReferencePacker.decode(SimpleTokenizer.encode(s)) == s
     }
 
   property("tokenizer additivity: count(a + ' ' + b) == count(a) + count(b)") =

@@ -62,6 +62,45 @@ class EngineSpec extends AnyFunSuite {
       assert(a.chunk == b.chunk)
       assert(a.embedding.sameElements(b.embedding))
     }
+    // several documents over more than one partition, one invalid row,
+    // and an id column not named doc_id
+    val many = docsDf(
+        11L -> ("First opinion sentence. " * 80).trim,
+        12L -> "   ",
+        13L -> "Short docket entry.",
+        14L -> ("Another long sentence with more words. " * 60).trim,
+        15L -> "Two sentences here. And one more.")
+      .withColumnRenamed("doc_id", "case_id")
+      .repartition(3)
+    assert(many.select(spark_partition_id()).distinct().count() >= 2)
+    val flagRows = engine.embedDocuments(many, idCol = "case_id").collect()
+      .flatMap(d => d.embeddings.map(c =>
+        (d.doc_id, c.chunk_number, c.chunk, c.embedding.toSeq)))
+      .sortBy(r => (r._1, r._2))
+    val explRows = engine.embedDocumentsExploded(many, idCol = "case_id")
+      .collect()
+      .map(c => (c.doc_id, c.chunk_number, c.chunk, c.embedding.toSeq))
+      .sortBy(r => (r._1, r._2))
+    assert(flagRows.map(_._1).distinct.sorted.sameElements(Seq(11L, 13L, 14L, 15L)))
+    assert(flagRows.count(_._1 == 14L) > 1)
+    assert(flagRows.sameElements(explRows))
+  }
+
+  test("null text is too short: both batch endpoints drop it and count it once") {
+    import spark.implicits._
+    val df = Seq(1L -> "Valid text here.", 2L -> (null: String))
+      .toDF("doc_id", "text")
+    val v = engine.withValidation(df)
+      .select("doc_id", "error_type", "error").collect().sortBy(_.getLong(0))
+    assert(v(0).isNullAt(1))
+    assert(v(1).getString(1) == "text_too_short")
+    assert(v(1).getString(2) == "Document 2: Text length (0) below minimum (1)")
+    val m = new graft.engine.Metrics(spark.sparkContext)
+    val me = new InceptionEngine(EngineConfig.default, Some(m))
+    assert(me.embedDocuments(df).collect().map(_.doc_id).sameElements(Seq(1L)))
+    assert(m.snapshot.getOrElse("error_count.batch.text_too_short", 0L) == 1L)
+    assert(engine.embedDocumentsExploded(df).collect().map(_.doc_id).toSet ==
+      Set(1L))
   }
 
   test("validateText endpoint shape (ref routes/embedding.py:129-150)") {

@@ -2,6 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.embed.Embedder
 import graft.text.{Chunker, SentenceSplitter, SimpleTokenizer}
 
 /** Golden-fixture parity tests on the reference's ONLY real test corpus:
@@ -119,6 +120,32 @@ class GoldenFixtureSpec extends AnyFunSuite {
       // ref :389-391: prefix preserved per sentence
       assert(sents(i).take(10).trim == c.take(10).trim,
         s"chunk $i prefix altered")
+    }
+  }
+
+  /** 64-bit FNV-1a over every chunk string and the raw bits of its
+    * vector, for the `Chunker.split` + `Embedder.embed` path. */
+  private def outputDigest(maxTokens: Int, overlap: Int): Long = {
+    var h = 0xcbf29ce484222325L
+    def mix(x: Long): Unit = h = (h ^ x) * 0x100000001b3L
+    Chunker.split(text, maxTokens, overlap).foreach { c =>
+      c.foreach(ch => mix(ch.toLong))
+      mix(-1L) // chunk separator
+      Embedder.embed(c).foreach(f =>
+        mix(java.lang.Float.floatToIntBits(f).toLong & 0xffffffffL))
+    }
+    h
+  }
+
+  test("fixture chunks and vectors are pinned bit for bit") {
+    // any drift in the token rule, the packing or the kernel moves these
+    val pinned = Seq(
+      (512, 2) -> 0xe4a92da33474a07dL,
+      (200, 1) -> 0xed89447a816027cbL,
+      (64, 0) -> 0x76ef4bf34f8e3321L)
+    pinned.foreach { case ((mt, ov), want) =>
+      val got = outputDigest(mt, ov)
+      assert(got == want, f"($mt, $ov): digest 0x$got%016x")
     }
   }
 
