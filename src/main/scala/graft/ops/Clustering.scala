@@ -57,11 +57,7 @@ object Clustering {
       col(vecCol).as("v"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      val planes = Dedup.hyperplanes(
-        math.max(1, (math.log(k.toDouble) / math.log(2)).ceil.toInt), dim)
-      val bucketU = udf((v: Array[Float]) =>
-        Dedup.hyperplaneBucket(v, planes) % k)
-      var assigned = data.withColumn("list_id", bucketU(col("v")))
+      var assigned = Similarity.hyperplaneInit(data, k, dim)
       var centroids = Array.empty[(Int, Array[Float])]
       var it = 0
       var converged = false

@@ -84,19 +84,14 @@ object Pq {
     require(dim % m == 0, s"dim=$dim not divisible by m=$m")
     require(k >= 1 && iters >= 1) // k=1 = the mean-codebook distortion bound
     val subDim = dim / m
-    val numPlanes =
-      math.max(1, (math.log(k.toDouble) / math.log(2)).ceil.toInt)
     val data = df.select(col(idCol).cast("long").as("vec_id"),
         col(vecCol).as("full"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      val planes = Dedup.hyperplanes(numPlanes, subDim)
       val books = (0 until m).map { s =>
         val sub = data.select(col("vec_id"),
           slice(col("full"), s * subDim + 1, subDim).as("v"))
-        val bucketU = udf((v: Array[Float]) =>
-          Dedup.hyperplaneBucket(v, planes) % k)
-        var assigned = sub.withColumn("list_id", bucketU(col("v")))
+        var assigned = Similarity.hyperplaneInit(sub, k, subDim)
         var centroids = Array.empty[(Int, Array[Float])]
         for (_ <- 1 to iters) {
           centroids = Similarity.refineCentroids(assigned, subDim)
@@ -178,9 +173,9 @@ object Pq {
   }
 
   /** IVF-PQ: the composed billion-scale ANN layout. An IVF coarse
-    * layer (hyperplane init → one fixed-point centroid refinement →
-    * cosine assignment — the exact [[Similarity]] contract the ann_ivf
-    * oracle replays) prunes candidates to the query's `nProbe` lists;
+    * layer ([[Similarity.trainIvf]]: hyperplane init → one fixed-point
+    * centroid refinement → cosine assignment — the exact contract the
+    * ann_ivf oracle replays) prunes candidates to the query's `nProbe` lists;
     * the ADC fine ranking then scores ONLY the survivors' codes. At
     * scale both layers are precomputed index artifacts (list-partitioned
     * code tables); the probe reads nProbe partitions of 8-byte codes —
@@ -189,21 +184,14 @@ object Pq {
   def ivfAdcTopK(
       df: DataFrame, idCol: String, vecCol: String, model: Model,
       numPlanes: Int, nProbe: Int, query: Array[Float], k: Int): DataFrame = {
-    val dim = model.dim
-    val data = df.select(col(idCol).cast("long").as("vec_id"),
-      col(vecCol).as("v"))
-    val planes = Dedup.hyperplanes(numPlanes, dim)
-    val bucketU = udf((v: Array[Float]) =>
-      Dedup.hyperplaneBucket(v, planes))
-    val centroids = Similarity.refineCentroids(
-      data.withColumn("list_id", bucketU(col("v"))), dim)
-    val assigned = Similarity.assignToCentroids(data, centroids, dim)
-    val qLists = centroids
-      .map { case (id, c) => (id, graft.embed.Embedder.cosine(query, c)) }
-      .sortBy { case (id, s) => (-s, id) }
-      .take(nProbe).map(_._1)
+    require(numPlanes <= 31, s"numPlanes=$numPlanes > 31 would alias bucket bits")
+    // 2^numPlanes lists: ceil(log2) of it is numPlanes again and every
+    // numPlanes-bit bucket is below it, so the `% nLists` is a no-op
+    val (centroids, assigned) =
+      Similarity.trainIvf(df, idCol, vecCol, 1 << numPlanes, model.dim)
+    val qLists = Similarity.nearestLists(query, centroids, nProbe)
     val cand = assigned
-      .filter(col("list_id").isin(qLists.map(Int.box): _*))
+      .filter(col("list_id").isin(qLists: _*))
       .select(col("vec_id"), col("v"))
     adcTopK(encode(cand, "vec_id", "v", model), "vec_id", model, query, k)
   }

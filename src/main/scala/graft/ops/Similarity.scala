@@ -1,22 +1,26 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Approximate-nearest-neighbor similarity search over an embedding column
-  * (`ARRAY<FLOAT>`).
-  *
-  * Two paths:
-  *   - [[bruteForceTopK]] — exact cosine top-k as pure Column expressions
-  *     (`zip_with` dot product + `aggregate` fold), fully codegen'd, no
-  *     UDF. Scan-shaped: at 100 TB this is one narrow pass + a global
-  *     top-k (Spark's TakeOrderedAndProject — no full sort, no wide
-  *     shuffle). The baseline every ANN variant is measured against.
-  *   - [[lshTopK]] — random-hyperplane LSH bucket pruning: probe only
-  *     buckets within `probeHamming` bits of the query's bucket. Cuts the
-  *     scanned fraction to ~sum(C(planes,i))/2^planes (e.g. 16 planes,
-  *     probe<=2: ~0.2%) at some recall cost; recall is measured in
-  *     SimilaritySpec against the brute-force truth.
+/** Exact and approximate nearest-neighbor search over an embedding column
+  * (`ARRAY<FLOAT>`). Every top-k surface is a pruning step in front of
+  * ONE scorer, [[score]] (native `graft_cosine` against the query as one
+  * typed literal), and ONE ranking rule, [[rankOrder]]: 4-dp rounded
+  * cosine descending, id ascending, then `limit(k)`
+  * (TakeOrderedAndProject — no full sort, no wide shuffle). The pruning
+  * steps:
+  *   - [[bruteForceTopK]]: none — the baseline every ANN variant is
+  *     measured against;
+  *   - [[matryoshkaTopK]]: rank on a dimension prefix, rerank survivors;
+  *   - [[lshTopK]] / [[lshTopKIndexed]] / [[lshTopKMultiProbe]]: the
+  *     hamming ball or margin-ordered probe set around the query's
+  *     hyperplane bucket ([[bucketCol]]), over a full scan or a
+  *     bucket-partitioned layout ([[writeLshIndex]]);
+  *   - [[ivfTopK]] / [[ivfTopKIndexed]]: the nProbe lists nearest the
+  *     query ([[trainIvf]]), over a full scan or a list-partitioned
+  *     layout ([[writeIvfIndex]]);
+  *   - [[topKJoin]]: a broadcast query set, two windows per query.
   */
 object Similarity {
 
@@ -28,7 +32,7 @@ object Similarity {
     * same value without the per-row intermediate array.
     */
   def cosineCol(vec: Column, query: Array[Float]): Column = {
-    val q = array(query.toSeq.map(v => lit(v.toDouble)): _*)
+    val q = typedLit(query.map(_.toDouble))
     val dot = aggregate(
       zip_with(vec, q, (a, b) => a * b), lit(0.0d), (acc, x) => acc + x)
     val nv = sqrt(aggregate(
@@ -38,10 +42,60 @@ object Similarity {
       .otherwise(dot / (nv * lit(nq)))
   }
 
-  /** Native-expression cosine against a literal query vector. */
-  private def cosineNative(df: DataFrame, vec: Column, query: Array[Float]): Column = {
-    graft.functions.CosineSimilarity.register(df.sparkSession)
-    graft.functions.CosineSimilarity.cosine(vec, typedLit(query))
+  /** The one scorer: native `graft_cosine` of `vec` against `query`. */
+  private def score(spark: SparkSession, vec: Column, query: Column): Column = {
+    graft.functions.CosineSimilarity.register(spark)
+    graft.functions.CosineSimilarity.cosine(vec, query)
+  }
+
+  /** [[score]] against a constant query, passed as ONE typed literal. */
+  private def score(spark: SparkSession, vec: Column, query: Array[Float]): Column =
+    score(spark, vec, typedLit(query))
+
+  /** The one ranking rule: the ROUNDED score descending with the id as
+    * tiebreak. Raw-double ordering can differ in the last ulp between
+    * accumulation orders (and between this kernel and an oracle),
+    * flipping top-k membership at the boundary.
+    */
+  private def rankOrder(scoreCol: String, idCol: String): Seq[Column] =
+    Seq(round(col(scoreCol), 4).desc, col(idCol))
+
+  /** The best `k` rows of `df` by [[rankOrder]] over `vec_id`. */
+  private def topK(df: DataFrame, scoreCol: String, k: Int): DataFrame =
+    df.orderBy(rankOrder(scoreCol, "vec_id"): _*).limit(k)
+
+  /** Sign bits of `v` against the first `numPlanes` [[Dedup.hyperplanes]]
+    * of width `dim`, optionally `% modulus`. Bit `p` is `1 << p`.
+    */
+  private[ops] def bucketCol(
+      v: Column, numPlanes: Int, dim: Int, modulus: Option[Int] = None): Column = {
+    require(numPlanes <= 31, s"numPlanes=$numPlanes > 31 would alias bucket bits")
+    val planes = Dedup.hyperplanes(numPlanes, dim)
+    udf { (x: Array[Float]) =>
+      val b = Dedup.hyperplaneBucket(x, planes)
+      modulus.fold(b)(b % _)
+    }.apply(v)
+  }
+
+  /** Deterministic initial `list_id` of the IVF builds, k-means and the
+    * PQ codebooks: the bucket over ceil(log2 nLists) planes, `% nLists`.
+    */
+  private[ops] def hyperplaneInit(
+      data: DataFrame, nLists: Int, dim: Int): DataFrame = {
+    val numPlanes = math.max(1, 32 - Integer.numberOfLeadingZeros(nLists - 1))
+    data.withColumn("list_id",
+      bucketCol(col("v"), numPlanes, dim, Some(nLists)))
+  }
+
+  /** IVF coarse quantizer: [[hyperplaneInit]] → one [[refineCentroids]]
+    * → [[assignToCentroids]]; (centroids, `(vec_id, v, list_id)` rows).
+    */
+  private[ops] def trainIvf(
+      df: DataFrame, idCol: String, vecCol: String, nLists: Int, dim: Int
+  ): (Array[(Int, Array[Float])], DataFrame) = {
+    val data = df.select(col(idCol).cast("long").as("vec_id"), col(vecCol).as("v"))
+    val centroids = refineCentroids(hyperplaneInit(data, nLists, dim), dim)
+    (centroids, assignToCentroids(data, centroids, dim))
   }
 
   /** Exact cosine top-k: narrow scan + TakeOrderedAndProject. */
@@ -52,15 +106,9 @@ object Similarity {
       query: Array[Float],
       k: Int
   ): DataFrame =
-    df.select(
-        col(idCol).cast("long").as("vec_id"),
-        cosineNative(df, col(vecCol), query).as("cosine"))
-      // rank on the ROUNDED score with the id as tiebreak: raw-double
-      // ordering can differ in the last ulp between accumulation orders
-      // (and between this kernel and an oracle), flipping top-k
-      // membership at the boundary
-      .orderBy(round(col("cosine"), 4).desc, col("vec_id"))
-      .limit(k)
+    topK(df.select(
+      col(idCol).cast("long").as("vec_id"),
+      score(df.sparkSession, col(vecCol), query).as("cosine")), "cosine", k)
 
   /** Matryoshka (coarse-to-fine) two-stage top-k: rank every vector by
     * cosine on its FIRST `coarseDim` components only (cosine normalizes
@@ -73,10 +121,8 @@ object Similarity {
     * full vectors for `candidates` rows only — here both stages read the
     * one fixture column, but the plan shape (narrow scan +
     * TakeOrderedAndProject, then an O(candidates) rerank) is the same.
-    *
-    * Both stages rank on the 4dp-ROUNDED score with the id tiebreak
-    * (same determinism contract as [[bruteForceTopK]]), so the candidate
-    * CUT is engine-reproducible too — the oracle replays both stages.
+    * Both stages rank by [[rankOrder]], so the candidate CUT is
+    * engine-reproducible too — the oracle replays both stages.
     */
   def matryoshkaTopK(
       df: DataFrame,
@@ -90,21 +136,16 @@ object Similarity {
     require(coarseDim >= 1 && coarseDim < query.length,
       "coarseDim must be in [1, dim)")
     require(candidates >= k, "candidates must be >= k")
-    val coarse = df
-      .select(
-        col(idCol).cast("long").as("vec_id"),
-        col(vecCol).as("v"),
-        cosineNative(df, slice(col(vecCol), 1, coarseDim),
-          query.take(coarseDim)).as("cosine_coarse"))
-      .orderBy(round(col("cosine_coarse"), 4).desc, col("vec_id"))
-      .limit(candidates)
-    coarse
-      .select(
-        col("vec_id"),
-        round(col("cosine_coarse"), 4).as("cosine_coarse"),
-        cosineNative(df, col("v"), query).as("cosine"))
-      .orderBy(round(col("cosine"), 4).desc, col("vec_id"))
-      .limit(k)
+    val spark = df.sparkSession
+    val coarse = topK(df.select(
+      col(idCol).cast("long").as("vec_id"),
+      col(vecCol).as("v"),
+      score(spark, slice(col(vecCol), 1, coarseDim),
+        query.take(coarseDim)).as("cosine_coarse")), "cosine_coarse", candidates)
+    topK(coarse.select(
+      col("vec_id"),
+      round(col("cosine_coarse"), 4).as("cosine_coarse"),
+      score(spark, col("v"), query).as("cosine")), "cosine", k)
       .select(col("vec_id"), col("cosine_coarse"),
         round(col("cosine"), 4).as("cosine"))
   }
@@ -120,22 +161,17 @@ object Similarity {
       query: Array[Float],
       k: Int,
       numPlanes: Int = 16,
-      probeHamming: Int = 2,
-      dim: Int = 768
+      probeHamming: Int = 2
   ): DataFrame = {
-    val planes = Dedup.hyperplanes(numPlanes, dim)
-    val qBucket = Dedup.hyperplaneBucket(query, planes)
-    val bucketU = udf((v: Array[Float]) => Dedup.hyperplaneBucket(v, planes))
-    df.select(
+    val qBucket = Dedup.hyperplaneBucket(
+      query, Dedup.hyperplanes(numPlanes, query.length))
+    topK(df.select(
         col(idCol).cast("long").as("vec_id"),
         col(vecCol).as("v"))
-      .withColumn("bucket", bucketU(col("v")))
+      .withColumn("bucket", bucketCol(col("v"), numPlanes, query.length))
       .filter(bit_count(col("bucket").bitwiseXOR(lit(qBucket))) <= probeHamming)
-      .select(col("vec_id"), cosineNative(df, col("v"), query).as("cosine"))
-      // same rounded-score + id-tiebreak ranking as bruteForceTopK: raw
-      // doubles can flip top-k membership in the last ulp between runs
-      .orderBy(round(col("cosine"), 4).desc, col("vec_id"))
-      .limit(k)
+      .select(col("vec_id"),
+        score(df.sparkSession, col("v"), query).as("cosine")), "cosine", k)
   }
 
   /** Persist the corpus in LSH-bucketed LAYOUT: parquet partitioned by the
@@ -150,16 +186,13 @@ object Similarity {
       vecCol: String,
       numPlanes: Int,
       dim: Int
-  ): DataFrame = {
-    val planes = Dedup.hyperplanes(numPlanes, dim)
-    val bucketU = udf((v: Array[Float]) => Dedup.hyperplaneBucket(v, planes))
+  ): DataFrame =
     df.select(col(idCol).cast("long").as("vec_id"), col(vecCol).as("v"))
-      .withColumn("bucket", bucketU(col("v")))
+      .withColumn("bucket", bucketCol(col("v"), numPlanes, dim))
       // co-locate each bucket in one task before the partitioned write:
       // without this every task writes a file into every bucket dir
       // (tasks × buckets tiny files — the classic partitionBy fan-out)
       .repartition(col("bucket"))
-  }
 
   /** Build parameters a persisted LSH layout was written with, recorded as
     * a `_params.json` sidecar: appending or probing with a different
@@ -229,15 +262,11 @@ object Similarity {
     requireLshParams(spark, indexPath, numPlanes, query.length)
     val planes = Dedup.hyperplanes(numPlanes, query.length)
     val qBucket = Dedup.hyperplaneBucket(query, planes)
-    graft.functions.CosineSimilarity.register(spark)
-    spark.read.parquet(indexPath)
+    topK(spark.read.parquet(indexPath)
       .filter(
         bit_count(col("bucket").bitwiseXOR(lit(qBucket))) <= probeHamming)
-      .select(col("vec_id"),
-        graft.functions.CosineSimilarity.cosine(
-          col("v"), array(query.toSeq.map(lit(_)): _*)).as("cosine"))
-      .orderBy(round(col("cosine"), 4).desc, col("vec_id"))
-      .limit(k)
+      .select(col("vec_id"), score(spark, col("v"), query).as("cosine")),
+      "cosine", k)
   }
 
   /** MULTI-PROBE probe of a [[writeLshIndex]] layout (Lv et al., VLDB
@@ -264,6 +293,7 @@ object Similarity {
       numPlanes: Int = 16,
       nProbes: Int = 8
   ): DataFrame = {
+    require(numPlanes <= 31, s"numPlanes=$numPlanes > 31 would alias bucket bits")
     requireLshParams(spark, indexPath, numPlanes, query.length)
     val planes = Dedup.hyperplanes(numPlanes, query.length)
     val qBucket = Dedup.hyperplaneBucket(query, planes)
@@ -283,14 +313,10 @@ object Similarity {
       } yield ((1 << a) | (1 << b), margins(a) + margins(b)))
     val probes = cands.sortBy { case (mask, score) => (score, mask) }
       .take(nProbes).map { case (mask, _) => qBucket ^ mask }
-    graft.functions.CosineSimilarity.register(spark)
-    spark.read.parquet(indexPath)
+    topK(spark.read.parquet(indexPath)
       .filter(col("bucket").isin(probes: _*))
-      .select(col("vec_id"),
-        graft.functions.CosineSimilarity.cosine(
-          col("v"), array(query.toSeq.map(lit(_)): _*)).as("cosine"))
-      .orderBy(round(col("cosine"), 4).desc, col("vec_id"))
-      .limit(k)
+      .select(col("vec_id"), score(spark, col("v"), query).as("cosine")),
+      "cosine", k)
   }
 
   /** IVF (inverted-file) approximate top-k: a coarse quantizer assigns
@@ -300,8 +326,8 @@ object Similarity {
     * WRITTEN PARTITIONED BY list id, making a probe a partition-pruned
     * scan of nProbe/nLists of the data.
     *
-    * Centroids here come from one k-means-style refinement over a
-    * deterministic hash-seeded init (cheap, reproducible, no MLlib
+    * Centroids come from [[trainIvf]] (one k-means-style refinement of a
+    * deterministic hash-seeded init: cheap, reproducible, no MLlib
     * dependency); quality is measured against brute force in OpsSpec.
     */
   def ivfTopK(
@@ -311,29 +337,15 @@ object Similarity {
       query: Array[Float],
       k: Int,
       nLists: Int = 16,
-      nProbe: Int = 4,
-      dim: Int = 768
+      nProbe: Int = 4
   ): DataFrame = {
-    graft.functions.CosineSimilarity.register(df.sparkSession)
-    val data = df.select(col(idCol).cast("long").as("vec_id"),
-      col(vecCol).as("v"))
-    // deterministic init: hyperplane-bucket centroids (means of coarse
-    // buckets), refined by one Lloyd step
-    val planes = Dedup.hyperplanes(
-      math.max(1, (math.log(nLists.toDouble) / math.log(2)).ceil.toInt), dim)
-    val bucketU = udf((v: Array[Float]) =>
-      Dedup.hyperplaneBucket(v, planes) % nLists)
-    val init = data.withColumn("list_id", bucketU(col("v")))
-    val centroids = refineCentroids(init, dim)
-    val assigned = assignToCentroids(data, centroids, dim)
+    val (centroids, assigned) =
+      trainIvf(df, idCol, vecCol, nLists, query.length)
     val qList = nearestLists(query, centroids, nProbe)
-    assigned
+    topK(assigned
       .filter(col("list_id").isin(qList: _*))
       .select(col("vec_id"),
-        graft.functions.CosineSimilarity.cosine(
-          col("v"), array(query.toSeq.map(lit(_)): _*)).as("cosine"))
-      .orderBy(round(col("cosine"), 4).desc, col("vec_id"))
-      .limit(k)
+        score(df.sparkSession, col("v"), query).as("cosine")), "cosine", k)
   }
 
   /** Persist the corpus in IVF layout: parquet partitioned by list id
@@ -353,15 +365,8 @@ object Similarity {
       nLists: Int = 16,
       dim: Int = 768
   ): Array[(Int, Array[Float])] = {
-    val data = df.select(col(idCol).cast("long").as("vec_id"),
-      col(vecCol).as("v"))
-    val planes = Dedup.hyperplanes(
-      math.max(1, (math.log(nLists.toDouble) / math.log(2)).ceil.toInt), dim)
-    val bucketU = udf((v: Array[Float]) =>
-      Dedup.hyperplaneBucket(v, planes) % nLists)
-    val init = data.withColumn("list_id", bucketU(col("v")))
-    val centroids = refineCentroids(init, dim)
-    assignToCentroids(data, centroids, dim)
+    val (centroids, assigned) = trainIvf(df, idCol, vecCol, nLists, dim)
+    assigned
       .repartition(col("list_id"))
       .write.mode("overwrite").partitionBy("list_id").parquet(path)
     val spark = df.sparkSession
@@ -442,16 +447,15 @@ object Similarity {
       k: Int,
       nProbe: Int = 4
   ): DataFrame = {
-    graft.functions.CosineSimilarity.register(spark)
     val centroids = cachedIvfCentroids(spark, indexPath)
+    // both cosines would silently score on the common prefix
+    require(centroids.forall(_._2.length == query.length),
+      s"query width ${query.length} != index centroid width")
     val qLists = nearestLists(query, centroids, nProbe)
-    spark.read.parquet(indexPath)
+    topK(spark.read.parquet(indexPath)
       .filter(col("list_id").isin(qLists: _*))
-      .select(col("vec_id"),
-        graft.functions.CosineSimilarity.cosine(
-          col("v"), array(query.toSeq.map(lit(_)): _*)).as("cosine"))
-      .orderBy(round(col("cosine"), 4).desc, col("vec_id"))
-      .limit(k)
+      .select(col("vec_id"), score(spark, col("v"), query).as("cosine")),
+      "cosine", k)
   }
 
   /** Mean vector per list, computed DISTRIBUTED via the Centroid
@@ -494,7 +498,7 @@ object Similarity {
     data.withColumn("list_id", assignU(col("v")))
   }
 
-  private def nearestLists(
+  private[ops] def nearestLists(
       query: Array[Float], centroids: Array[(Int, Array[Float])],
       nProbe: Int): Seq[Int] =
     centroids
@@ -521,24 +525,20 @@ object Similarity {
       queryVec: String,
       k: Int
   ): DataFrame = {
-    graft.functions.CosineSimilarity.register(corpus.sparkSession)
     val joined = corpus
       .select(col(corpusId).cast("long").as("corpus_id"),
         col(corpusVec).as("cv"))
       .crossJoin(broadcast(queries.select(
         col(queryId).cast("long").as("query_id"), col(queryVec).as("qv"))))
       .withColumn("cosine",
-        graft.functions.CosineSimilarity.cosine(col("cv"), col("qv")))
+        score(corpus.sparkSession, col("cv"), col("qv")))
       .withColumn("pid", spark_partition_id())
-    // rank on the ROUNDED cosine + id like every other ranking surface
-    // (lshTopK, ivfTopK, q_knn_eval): last-ulp FP differences across
-    // engines/partitionings must never flip which rows make the top-k
+    // the same ranking rule as every other surface, in both windows
+    val order = rankOrder("cosine", "corpus_id")
     val wLocal = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id", "pid")
-      .orderBy(round(col("cosine"), 4).desc, col("corpus_id"))
+      .partitionBy("query_id", "pid").orderBy(order: _*)
     val wGlobal = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id")
-      .orderBy(round(col("cosine"), 4).desc, col("corpus_id"))
+      .partitionBy("query_id").orderBy(order: _*)
     joined
       .withColumn("lr", row_number().over(wLocal))
       .filter(col("lr") <= k)
@@ -607,6 +607,22 @@ object Similarity {
       if (cur == src.version) None else Some((src, cur))
     }
 
+  /** `build` an index from the latest snapshot of `tableRoot`, then bind
+    * it to that version ([[IndexSource]]). */
+  private def buildFromTable(
+      spark: SparkSession,
+      tableRoot: String,
+      idCol: String,
+      vecCol: String,
+      indexPath: String)(build: DataFrame => Unit): Unit = {
+    val v = graft.table.TxnTable.latestVersion(spark, tableRoot)
+      .getOrElse(throw new IllegalArgumentException(
+        s"no table at $tableRoot — create() first"))
+    build(graft.table.TxnTable.snapshotAt(spark, tableRoot, v))
+    writeIndexSource(spark, indexPath,
+      IndexSource(tableRoot, v, idCol, vecCol))
+  }
+
   /** Build an LSH layout FROM a TxnTable snapshot and bind it to the
     * committed version it reflects ([[IndexSource]]).
     */
@@ -617,16 +633,10 @@ object Similarity {
       vecCol: String,
       indexPath: String,
       numPlanes: Int = 16,
-      dim: Int = 768): Unit = {
-    val v = graft.table.TxnTable.latestVersion(spark, tableRoot)
-      .getOrElse(throw new IllegalArgumentException(
-        s"no table at $tableRoot — create() first"))
-    writeLshIndex(
-      graft.table.TxnTable.snapshotAt(spark, tableRoot, v),
-      idCol, vecCol, indexPath, numPlanes, dim)
-    writeIndexSource(spark, indexPath,
-      IndexSource(tableRoot, v, idCol, vecCol))
-  }
+      dim: Int = 768): Unit =
+    buildFromTable(spark, tableRoot, idCol, vecCol, indexPath) { snap =>
+      writeLshIndex(snap, idCol, vecCol, indexPath, numPlanes, dim)
+    }
 
   /** IVF sibling of [[writeLshIndexFromTable]]. */
   def writeIvfIndexFromTable(
@@ -636,16 +646,10 @@ object Similarity {
       vecCol: String,
       indexPath: String,
       nLists: Int = 16,
-      dim: Int = 768): Unit = {
-    val v = graft.table.TxnTable.latestVersion(spark, tableRoot)
-      .getOrElse(throw new IllegalArgumentException(
-        s"no table at $tableRoot — create() first"))
-    writeIvfIndex(
-      graft.table.TxnTable.snapshotAt(spark, tableRoot, v),
-      idCol, vecCol, indexPath, nLists, dim)
-    writeIndexSource(spark, indexPath,
-      IndexSource(tableRoot, v, idCol, vecCol))
-  }
+      dim: Int = 768): Unit =
+    buildFromTable(spark, tableRoot, idCol, vecCol, indexPath) { snap =>
+      writeIvfIndex(snap, idCol, vecCol, indexPath, nLists, dim)
+    }
 
   /** Partition-scoped index refresh shared by LSH and IVF: given the
     * net change rows between the recorded and current versions
@@ -733,11 +737,8 @@ object Similarity {
       case None => false
       case Some((src, cur)) =>
         requireLshParams(spark, indexPath, numPlanes, dim)
-        val planes = Dedup.hyperplanes(numPlanes, dim)
-        val bucketU =
-          udf((v: Array[Float]) => Dedup.hyperplaneBucket(v, planes))
         refreshPartitionedIndex(spark, indexPath, "bucket", src, cur,
-          rows => rows.withColumn("bucket", bucketU(col("v"))))
+          rows => rows.withColumn("bucket", bucketCol(col("v"), numPlanes, dim)))
         writeIndexSource(spark, indexPath, src.copy(version = cur))
         true
     }
@@ -765,6 +766,23 @@ object Similarity {
         true
     }
 
+  /** Staleness contract of the checked probes: `refresh` a lagging index
+    * or refuse with a loud [[StaleIndexException]] naming `refreshFn`. */
+  private def requireFresh(
+      spark: SparkSession,
+      indexPath: String,
+      kind: String,
+      refreshFn: String,
+      refreshIfStale: Boolean)(refresh: => Unit): Unit =
+    indexStaleness(spark, indexPath).foreach { case (src, cur) =>
+      if (refreshIfStale) refresh
+      else throw new StaleIndexException(
+        s"$kind index at $indexPath reflects ${src.root} version " +
+          s"${src.version} but the table is at $cur — probe would " +
+          "return deleted/overwritten vectors; refresh the index " +
+          s"($refreshFn) or probe with refreshIfStale=true")
+    }
+
   /** [[lshTopKIndexed]] with the staleness contract enforced: refuse
     * (loud [[StaleIndexException]]) or refresh-then-probe when the
     * index lags its source table. Unbound legacy layouts probe as-is.
@@ -777,14 +795,8 @@ object Similarity {
       numPlanes: Int = 16,
       probeHamming: Int = 2,
       refreshIfStale: Boolean = false): DataFrame = {
-    indexStaleness(spark, indexPath).foreach { case (src, cur) =>
-      if (refreshIfStale)
-        refreshLshIndex(spark, indexPath, numPlanes, query.length)
-      else throw new StaleIndexException(
-        s"LSH index at $indexPath reflects ${src.root} version " +
-          s"${src.version} but the table is at $cur — probe would " +
-          "return deleted/overwritten vectors; refresh the index " +
-          "(refreshLshIndex) or probe with refreshIfStale=true")
+    requireFresh(spark, indexPath, "LSH", "refreshLshIndex", refreshIfStale) {
+      refreshLshIndex(spark, indexPath, numPlanes, query.length)
     }
     lshTopKIndexed(spark, indexPath, query, k, numPlanes, probeHamming)
   }
@@ -797,13 +809,8 @@ object Similarity {
       k: Int,
       nProbe: Int = 4,
       refreshIfStale: Boolean = false): DataFrame = {
-    indexStaleness(spark, indexPath).foreach { case (src, cur) =>
-      if (refreshIfStale) refreshIvfIndex(spark, indexPath, query.length)
-      else throw new StaleIndexException(
-        s"IVF index at $indexPath reflects ${src.root} version " +
-          s"${src.version} but the table is at $cur — probe would " +
-          "return deleted/overwritten vectors; refresh the index " +
-          "(refreshIvfIndex) or probe with refreshIfStale=true")
+    requireFresh(spark, indexPath, "IVF", "refreshIvfIndex", refreshIfStale) {
+      refreshIvfIndex(spark, indexPath, query.length)
     }
     ivfTopKIndexed(spark, indexPath, query, k, nProbe)
   }

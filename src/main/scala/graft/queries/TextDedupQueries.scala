@@ -187,7 +187,7 @@ private[graft] trait SparkEntryTextDedup { this: SparkEntry.type =>
       .head().getAs[scala.collection.Seq[Float]]("embedding").toArray
     graft.ops.Similarity
       .lshTopK(e, "vec_id", "embedding", q, 10,
-        numPlanes = 8, probeHamming = 3, dim = 64)
+        numPlanes = 8, probeHamming = 3)
       .select(col("vec_id"), round(col("cosine"), 4).as("cosine"))
   }
 
@@ -387,7 +387,7 @@ private[graft] trait SparkEntryTextDedup { this: SparkEntry.type =>
       .head().getAs[scala.collection.Seq[Float]]("embedding").toArray
     graft.ops.Similarity
       .ivfTopK(e, "vec_id", "embedding", q, 10,
-        nLists = 8, nProbe = 3, dim = 64)
+        nLists = 8, nProbe = 3)
       .select(col("vec_id"), round(col("cosine"), 4).as("cosine"))
   }
 

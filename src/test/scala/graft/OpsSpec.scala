@@ -147,7 +147,7 @@ class OpsSpec extends AnyFunSuite {
     val exact = Similarity.bruteForceTopK(e, "vec_id", "embedding", q, 10)
       .collect().map(_.getLong(0)).toSet
     val approx = Similarity.lshTopK(e, "vec_id", "embedding", q, 10,
-      numPlanes = 8, probeHamming = 3, dim = 64)
+      numPlanes = 8, probeHamming = 3)
       .collect().map(_.getLong(0)).toSet
     val recall = (exact intersect approx).size.toDouble / exact.size
     assert(recall >= 0.5, s"recall=$recall") // probe<=3 of 8 planes
@@ -284,6 +284,11 @@ class OpsSpec extends AnyFunSuite {
     // matched params still work
     assert(Similarity.lshTopKIndexed(spark, dir, q, 5, numPlanes = 8)
       .collect().head.getLong(0) == 0L)
+    // bucket bit p is 1 << p: a 32nd plane would alias bit 0
+    intercept[IllegalArgumentException] {
+      Similarity.writeLshIndex(e, "vec_id", "embedding", dir,
+        numPlanes = 32, dim = 64)
+    }
   }
 
   test("ANN: IVF top-k recall vs brute force; self-match always found") {
@@ -293,7 +298,7 @@ class OpsSpec extends AnyFunSuite {
     val exact = Similarity.bruteForceTopK(e, "vec_id", "embedding", q, 10)
       .collect().map(_.getLong(0)).toSet
     val ivf = Similarity.ivfTopK(e, "vec_id", "embedding", q, 10,
-      nLists = 8, nProbe = 3, dim = 64)
+      nLists = 8, nProbe = 3)
       .collect().map(_.getLong(0)).toSet
     val recall = (exact intersect ivf).size.toDouble / exact.size
     assert(recall >= 0.5, s"recall=$recall")
@@ -536,6 +541,10 @@ class OpsSpec extends AnyFunSuite {
     val top = probe.collect()
     assert(top.head.getLong(0) == 0L)
     assert(math.abs(top.head.getDouble(1) - 1.0) < 1e-9)
+    // a query of another width must fail loudly, not rank on a prefix
+    intercept[IllegalArgumentException] {
+      Similarity.ivfTopKIndexed(spark, dir, q.take(32), 5, nProbe = 3)
+    }
   }
 
   test("approx_count_distinct within 5% of exact on the query surface") {
@@ -1801,6 +1810,100 @@ class OpsSpec extends AnyFunSuite {
     val recall = (exact.toSet intersect pruned).size.toDouble / exact.size
     assert(recall >= 0.5, s"matryoshka recall=$recall")
     assert(pruned.contains(0L))
+  }
+
+  /** 64-bit FNV-1a over a stream of longs (ids, raw double/float bits,
+    * chars), one whole long per step. */
+  private final class Fnv {
+    var h = 0xcbf29ce484222325L
+    def mix(x: Long): Unit = h = (h ^ x) * 0x100000001b3L
+    def dbl(d: Double): Unit = mix(java.lang.Double.doubleToLongBits(d))
+    def floats(v: Iterable[Float]): Unit = v.foreach(f =>
+      mix(java.lang.Float.floatToIntBits(f).toLong & 0xffffffffL))
+    def str(s: String): Unit = { s.foreach(c => mix(c.toLong)); mix(-1L) }
+  }
+
+  private def rowsDigest(df: org.apache.spark.sql.DataFrame): Long = {
+    val f = new Fnv
+    df.collect().foreach { r =>
+      r.toSeq.foreach {
+        case l: Long => f.mix(l)
+        case i: Int => f.mix(i.toLong)
+        case d: Double => f.dbl(d)
+        case b: java.math.BigDecimal => f.str(b.toPlainString)
+        case s: String => f.str(s)
+        case o => fail(s"undigested value $o")
+      }
+      f.mix(-2L) // row separator
+    }
+    f.h
+  }
+
+  private def centroidsDigest(cs: Array[(Int, Array[Float])]): Long = {
+    val f = new Fnv
+    cs.foreach { case (id, c) => f.mix(id.toLong); f.floats(c) }
+    f.h
+  }
+
+  test("ANN/IVF/PQ/k-means outputs are pinned bit for bit") {
+    // ids, raw cosine bits, bucket/list choice and centroid floats of
+    // every vector top-k surface; any drift in scoring, ranking,
+    // bucketing or IVF training moves one of these
+    val e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    val q = e.filter(col("vec_id") === 0)
+      .head().getAs[scala.collection.Seq[Float]]("embedding").toArray
+    val lshDir = java.nio.file.Files.createTempDirectory("graft_pin_lsh").toString
+    Similarity.writeLshIndex(e, "vec_id", "embedding", lshDir,
+      numPlanes = 8, dim = 64)
+    val ivfDir = java.nio.file.Files.createTempDirectory("graft_pin_ivf").toString
+    val ivfCentroids = Similarity.writeIvfIndex(
+      e, "vec_id", "embedding", ivfDir, nLists = 6, dim = 64)
+    val queries = e.filter(col("vec_id") < 3)
+      .select(col("vec_id").as("qid"), col("embedding").as("qv"))
+    val pq = graft.ops.Pq.fit(e, "vec_id", "embedding",
+      dim = 64, m = 8, k = 16, iters = 2)
+    val pqBooks = new Fnv
+    pq.codebooks.foreach(b => pqBooks.mix(centroidsDigest(b)))
+    val got = Seq(
+      "bruteForceTopK" -> rowsDigest(
+        Similarity.bruteForceTopK(e, "vec_id", "embedding", q, 10)),
+      "matryoshkaTopK" -> rowsDigest(Similarity.matryoshkaTopK(
+        e, "vec_id", "embedding", q, k = 10, coarseDim = 16, candidates = 50)),
+      "lshTopK" -> rowsDigest(Similarity.lshTopK(e, "vec_id", "embedding",
+        q, 10, numPlanes = 8, probeHamming = 3)),
+      "lshTopKIndexed" -> rowsDigest(Similarity.lshTopKIndexed(
+        spark, lshDir, q, 10, numPlanes = 8, probeHamming = 3)),
+      "lshTopKMultiProbe" -> rowsDigest(Similarity.lshTopKMultiProbe(
+        spark, lshDir, q, 10, numPlanes = 8, nProbes = 8)),
+      "ivfTopK" -> rowsDigest(Similarity.ivfTopK(e, "vec_id", "embedding",
+        q, 10, nLists = 6, nProbe = 3)),
+      "ivfTopKIndexed" -> rowsDigest(
+        Similarity.ivfTopKIndexed(spark, ivfDir, q, 10, nProbe = 3)),
+      "topKJoin" -> rowsDigest(Similarity.topKJoin(e, queries, "vec_id",
+        "embedding", "qid", "qv", 5).orderBy("query_id", "rank")),
+      "writeIvfIndex" -> centroidsDigest(ivfCentroids),
+      "kMeans" -> centroidsDigest(graft.ops.Clustering.kMeans(
+        e, "vec_id", "embedding", k = 5, maxIters = 2, dim = 64)._2),
+      "Pq.fit" -> pqBooks.h,
+      "Pq.ivfAdcTopK" -> rowsDigest(graft.ops.Pq.ivfAdcTopK(e, "vec_id",
+        "embedding", pq, numPlanes = 3, nProbe = 3, q, 10)))
+    // recorded before the scorer/ranking/bucket/IVF-trainer refactor
+    val pinned = Map(
+      "bruteForceTopK" -> 0x82d31900b0aabcf6L,
+      "matryoshkaTopK" -> 0x30f0798a7f946e34L,
+      "lshTopK" -> 0xfe2ab1d89e49fde6L,
+      "lshTopKIndexed" -> 0xfe2ab1d89e49fde6L,
+      "lshTopKMultiProbe" -> 0xb77de9deee784f9eL,
+      "ivfTopK" -> 0x49c2e128989e2ef7L,
+      "ivfTopKIndexed" -> 0x49c2e128989e2ef7L,
+      "topKJoin" -> 0x12ae142f01f6a39eL,
+      "writeIvfIndex" -> 0x3e8c8e3e8fd5f89bL,
+      "kMeans" -> 0xeb283ba8f6e9635fL,
+      "Pq.fit" -> 0x0098be909d351b56L,
+      "Pq.ivfAdcTopK" -> 0x5aa37e72aa87b320L)
+    val drift = got.filterNot { case (name, d) => pinned.get(name).contains(d) }
+    assert(drift.isEmpty, drift.map { case (name, d) =>
+      f""""$name" -> 0x$d%016xL""" }.mkString("digests moved: ", ", ", ""))
   }
 
   test("KMV sketch: mergeability — union of sketches == sketch of union") {
